@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.upsert import upsert_by_key
 from ..sources.snapshot import (
     carry_forward_geocodes,
+    has_snapshot_table,
     latest_snapshot,
     read_snapshot_table,
     write_snapshot,
@@ -80,14 +81,15 @@ def run_etl(
             spark, snapshot_root, prev_ts, "lf_geocode_sp_survey_point"
         )
         carried_geo = carry_forward_geocodes(prev_geo)
-        id_maps = {}
-        for name in tables_to_remap:
-            try:
-                id_maps[name] = read_snapshot_table(
-                    spark, snapshot_root, prev_ts, f"{name}_id_map"
-                )
-            except Exception:
-                id_maps[name] = empty_map
+        # a table first remapped tonight has no map yet and numbers from
+        # 1; a map that exists but cannot be read fails the run, since
+        # renumbering would break the stable-forever surrogate ids
+        id_maps = {
+            name: read_snapshot_table(spark, snapshot_root, prev_ts, f"{name}_id_map")
+            if has_snapshot_table(snapshot_root, prev_ts, f"{name}_id_map")
+            else empty_map
+            for name in tables_to_remap
+        }
     else:
         stored_pid, carried_geo = empty_pid, None
         id_maps = {name: empty_map for name in tables_to_remap}

@@ -126,7 +126,7 @@ def tune(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except (PySparkException, Py4JError):  # pragma: no cover
+        except (PySparkException, Py4JError):
             # AnalysisException("Cannot modify the value of a static
             # config") on deployments where one of these was fixed at
             # launch; the session then keeps its launch-time value.
@@ -160,7 +160,7 @@ def _ship_package(spark: SparkSession) -> None:
                             zf.write(full, rel)
         spark.sparkContext.addPyFile(zpath)
         spark._cam_pkg_shipped = True
-    except (OSError, AttributeError, PySparkException, Py4JError):  # pragma: no cover
+    except (OSError, AttributeError, PySparkException, Py4JError):
         # OSError: tmpdir unwritable / zip IO; AttributeError: no
         # sparkContext (Spark Connect); PySpark/Py4J: addPyFile
         # rejected JVM-side. In all cases the driver-local import path

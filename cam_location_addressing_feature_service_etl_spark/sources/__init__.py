@@ -1,4 +1,5 @@
-"""Connector-shaped helpers: SPARQL binding flattening, ESRI paged
-source planning, snapshot lifecycle. Network I/O is isolated behind
-fetcher callables so everything is testable offline (the reference's
-tests substitute fixtures the same way, SURVEY §5)."""
+"""Connectors and snapshot lifecycle: the ``esri`` and ``sparql`` Python
+data sources (one live read path per endpoint, over the injected-
+transport clients in ``esri_http``/``sparql_http``), ESRI schema and
+incremental-predicate helpers, and timestamped parquet snapshots.
+Tests run the readers against a loopback HTTP endpoint (SURVEY §5)."""

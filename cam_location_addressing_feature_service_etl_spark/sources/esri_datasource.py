@@ -14,14 +14,14 @@ reference's count-before-scan, geocode.py:296-301) and executes
 incremental predicate into the ESRI ``where`` option (P5); column
 pruning maps to ``outFields`` via the ``fields`` option.
 
-``mode=fake`` serves deterministic synthetic features so the source is
-fully testable offline (the real mode uses EsriClient's urllib
-transport). Each task builds its own client — nothing network-bound is
-serialized.
+Both the batch reader and the stream reader page the layer through
+``EsriClient`` (``sources/esri_http.py``); each task builds its own
+client — nothing network-bound is serialized.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -42,32 +42,55 @@ class PagePartition(InputPartition):
     count: int
 
 
-def _fake_count(options: dict) -> int:
-    return int(options.get("fake_count", "5000"))
+class _LayerScan:
+    """What the batch and the stream reader share: the client built from
+    the options, the server-side count under ``where`` and one page of
+    features, fetched in a pinned order and decoded into row tuples."""
 
-
-def _fake_page(offset: int, count: int, total: int) -> list[tuple]:
-    rows = []
-    for i in range(offset, min(offset + count, total)):
-        rows.append(
-            (
-                i,
-                str(100000 + i),
-                f"https://linked.data.gov.au/def/geocode-types/type-{i % 7}",
-                138.0 + (i % 1600) / 100.0,
-                -29.0 + (i % 2000) / 100.0,
-            )
-        )
-    return rows
-
-
-class EsriReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
         self.options = options
         self.schema = schema
         self.page_size = int(options.get("page_size", "2000"))
-        self.mode = options.get("mode", "live")
         self.where = options.get("where", "1=1")
+
+    def _client(self):
+        from .esri_http import EsriClient
+
+        return EsriClient(
+            layer_url=self.options["layer_url"],
+            token_url=self.options.get("token_url"),
+            username=self.options.get("username", ""),
+            password=self.options.get("password", ""),
+        )
+
+    def _total(self) -> int:
+        return self._client().count(self.where)
+
+    def _rows(self, offset: int, count: int) -> list[tuple]:
+        fields = [f.name for f in self.schema.fields]
+        feats = self._client().fetch_page(
+            offset,
+            count,
+            where=self.where,
+            out_fields=fields,
+            # pinned order: parallel partitions (and stream replays) page
+            # the same layer at different times; without orderByFields the
+            # server may return overlapping/missing rows across pages
+            order_by=_resolve_order_by(self.options, self.schema),
+        )
+        rows = []
+        for feat in feats:
+            attrs = feat.get("attributes", {})
+            geom = feat.get("geometry", {})
+            rows.append(
+                tuple(geom.get(n) if n in ("x", "y") else attrs.get(n) for n in fields)
+            )
+        return rows
+
+
+class EsriReader(_LayerScan, DataSourceReader):
+    def __init__(self, options: dict, schema: StructType):
+        super().__init__(options, schema)
         self.pushed: list = []
 
     def pushFilters(self, filters):
@@ -100,13 +123,19 @@ class EsriReader(DataSourceReader):
         # which Spark filters back out). ORDERING comparisons are NOT:
         # a CI collation can order 'abc' < 'Z' where Spark's binary
         # comparison keeps it, so > < >= <= push for NUMERIC values
-        # only (collation-independent).
-        def lit(v) -> str | None:
-            if isinstance(v, bool) or not isinstance(v, (int, float, str)):
+        # only (collation-independent). NaN and ±inf have no SQL-92
+        # literal, so they are never pushed either.
+        def num(v) -> str | None:
+            if isinstance(v, bool) or not isinstance(v, (int, float)):
                 return None
+            if isinstance(v, float) and not math.isfinite(v):
+                return None
+            return str(v)
+
+        def lit(v) -> str | None:
             if isinstance(v, str):
                 return "'" + v.replace("'", "''") + "'"
-            return str(v)
+            return num(v)
 
         ops = {
             GreaterThan: ">",
@@ -122,11 +151,9 @@ class EsriReader(DataSourceReader):
             col = attr[0]
             op = ops.get(type(f))
             if op is not None:
-                if isinstance(f.value, bool) or not isinstance(
-                    f.value, (int, float)
-                ):
-                    continue  # string ordering is collation-dependent
-                fragments.append(f"{col} {op} {f.value}")
+                v = num(f.value)  # string ordering is collation-dependent
+                if v is not None:
+                    fragments.append(f"{col} {op} {v}")
             elif isinstance(f, EqualTo):
                 v = lit(f.value)
                 if v is not None:
@@ -151,18 +178,6 @@ class EsriReader(DataSourceReader):
             self.where = " AND ".join([self.where, *fragments])
         return filters  # Spark re-applies everything (partial pushdown)
 
-    def _total(self) -> int:
-        if self.mode == "fake":
-            return _fake_count(self.options)
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        return EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        ).count(self.where)
-
     def partitions(self) -> Sequence[InputPartition]:
         total = self._total()
         return [
@@ -171,33 +186,7 @@ class EsriReader(DataSourceReader):
         ]
 
     def read(self, partition: PagePartition) -> Iterator[tuple]:
-        if self.mode == "fake":
-            yield from _fake_page(partition.offset, partition.count, _fake_count(self.options))
-            return
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        client = EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        )
-        fields = [f.name for f in self.schema.fields]
-        for feat in client.fetch_page(
-            partition.offset,
-            partition.count,
-            where=self.where,
-            out_fields=fields,
-            # pinned order: parallel partitions page the same layer at
-            # different times; without orderByFields the server may
-            # return overlapping/missing rows across page boundaries
-            order_by=_resolve_order_by(self.options, self.schema),
-        ):
-            attrs = feat.get("attributes", {})
-            geom = feat.get("geometry", {})
-            yield tuple(
-                geom.get(f) if f in ("x", "y") else attrs.get(f) for f in fields
-            )
+        yield from self._rows(partition.offset, partition.count)
 
 
 class EsriDataSource(DataSource):
@@ -217,7 +206,6 @@ class EsriDataSource(DataSource):
         return EsriStreamReader(dict(self.options), schema)
 
 
-
 def _resolve_order_by(options: dict, schema) -> str:
     """Order field for paged reads: an explicit ``order_by`` option wins
     (empty string disables ordering for servers that reject it); else
@@ -230,7 +218,7 @@ def _resolve_order_by(options: dict, schema) -> str:
     return "objectid" if "objectid" in names else names[0]
 
 
-class EsriStreamReader(SimpleDataSourceStreamReader):
+class EsriStreamReader(_LayerScan, SimpleDataSourceStreamReader):
     """Micro-batch incremental scan of the layer: each batch fetches
     the next ``page_size`` features past the committed objectid
     watermark — the streaming twin of the reference's incremental
@@ -249,24 +237,6 @@ class EsriStreamReader(SimpleDataSourceStreamReader):
     replay — offset-based paging cannot be exactly-once there; freeze
     mutable layers with a ``where`` snapshot predicate instead."""
 
-    def __init__(self, options: dict, schema: StructType):
-        self.options = options
-        self.schema = schema
-        self.page_size = int(options.get("page_size", "2000"))
-        self.mode = options.get("mode", "live")
-
-    def _total(self) -> int:
-        if self.mode == "fake":
-            return _fake_count(self.options)
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        return EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        ).count(self.options.get("where", "1=1"))
-
     def initialOffset(self) -> dict:
         return {"next": 0}
 
@@ -275,34 +245,8 @@ class EsriStreamReader(SimpleDataSourceStreamReader):
         hi = min(lo + self.page_size, self._total())
         if hi <= lo:
             return iter(()), {"next": lo}
-        return iter(self._rows(lo, hi)), {"next": hi}
+        return iter(self._rows(lo, hi - lo)), {"next": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._rows(int(start["next"]), int(end["next"])))
-
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        if self.mode == "fake":
-            return _fake_page(lo, hi - lo, _fake_count(self.options))
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        client = EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        )
-        fields = [f.name for f in self.schema.fields]
-        out = []
-        for feat in client.fetch_page(
-            lo,
-            hi - lo,
-            where=self.options.get("where", "1=1"),
-            out_fields=fields,
-            order_by=_resolve_order_by(self.options, self.schema),
-        ):
-            attrs = feat.get("attributes", {})
-            geom = feat.get("geometry", {})
-            out.append(
-                tuple(geom.get(f) if f in ("x", "y") else attrs.get(f) for f in fields)
-            )
-        return out
+        lo = int(start["next"])
+        return iter(self._rows(lo, int(end["next"]) - lo))

@@ -5,42 +5,27 @@ Reproduces the reference's connector behaviors
 ``address_etl/crud.py:19-24``):
 
 - token auth via ``generateToken`` (15-min expiry)
-- re-auth + retry on ESRI error 498 (invalid token)
+- one re-auth per request on ESRI error 498 (invalid token)
 - exponential backoff on transport errors, bounded budget
 - ``returnCountOnly`` counts, paged ``query`` calls with
   ``resultOffset``/``resultRecordCount``/``outFields``
 
 Transport is injected (``send(url, data) -> dict``) so everything is
 testable offline; the default transport uses stdlib urllib — no
-third-party HTTP dependency. In the engine, an ``EsriClient`` bound to
-a layer becomes the ``fetch_page`` callable for
-``sources.esri.paged_feature_scan`` — each Spark task constructs its
-own client (connections are not serializable; the closure captures
-only the config).
+third-party HTTP dependency. ``sources/esri_datasource.py`` builds one
+client per planning call and per Spark task (connections are not
+serializable; the reader ships only its options).
 """
 
 from __future__ import annotations
 
-import json
 import time
-from collections.abc import Callable
 from dataclasses import dataclass, field
-from urllib.parse import urlencode
 
-Transport = Callable[[str, dict], dict]
-
-
-def urllib_transport(url: str, data: dict) -> dict:  # pragma: no cover - network
-    import urllib.request
-
-    req = urllib.request.Request(
-        url, data=urlencode(data).encode(), method="POST"
-    )
-    with urllib.request.urlopen(req, timeout=600) as resp:
-        return json.loads(resp.read().decode())
+from .transport import RequestError, Transport, post_json, with_backoff
 
 
-class EsriError(RuntimeError):
+class EsriError(RequestError):
     def __init__(self, code: int, message: str):
         super().__init__(f"ESRI error {code}: {message}")
         self.code = code
@@ -52,7 +37,7 @@ class EsriClient:
     token_url: str | None = None
     username: str = ""
     password: str = ""
-    transport: Transport = urllib_transport
+    transport: Transport = post_json
     max_backoff_seconds: float = 900.0
     token_refresh_margin: float = 60.0
     _token: str | None = field(default=None, repr=False)
@@ -84,32 +69,23 @@ class EsriClient:
 
     # --- request core with backoff + 498 re-auth --------------------------
 
+    def _send(self, params: dict) -> dict:
+        full = dict(params, f="json")
+        tok = self.token()
+        if tok is not None:
+            full["token"] = tok
+        return self.transport(f"{self.layer_url}/query", full)
+
     def _request(self, params: dict) -> dict:
-        delay = 1.0
-        waited = 0.0
-        while True:
-            try:
-                full = dict(params, f="json")
-                tok = self.token()
-                if tok is not None:
-                    full["token"] = tok
-                resp = self.transport(f"{self.layer_url}/query", full)
-                err = resp.get("error")
-                if err:
-                    if err.get("code") == 498:
-                        # invalid token: force re-auth once, then retry
-                        self._token = None
-                        continue
-                    raise EsriError(err.get("code", -1), str(err.get("message", "")))
-                return resp
-            except EsriError:
-                raise
-            except Exception:
-                if waited >= self.max_backoff_seconds:
-                    raise
-                time.sleep(min(delay, self.max_backoff_seconds - waited))
-                waited += delay
-                delay *= 2
+        resp = with_backoff(lambda: self._send(params), self.max_backoff_seconds)
+        if resp.get("error", {}).get("code") == 498:
+            # invalid token: re-authenticate once; a second 498 raises
+            self._token = None
+            resp = with_backoff(lambda: self._send(params), self.max_backoff_seconds)
+        err = resp.get("error")
+        if err:
+            raise EsriError(err.get("code", -1), str(err.get("message", "")))
+        return resp
 
     # --- query surface -----------------------------------------------------
 

@@ -36,10 +36,10 @@ def list_snapshots(root: str) -> list[str]:
     return sorted(out)
 
 
-def latest_snapshot(root: str, prefix: str = "") -> str | None:
+def latest_snapshot(root: str) -> str | None:
     """O1: latest snapshot = max timestamp (desc-lex sort + first, as in
     s3.py:37-46 — ISO-8601 timestamps sort lexicographically)."""
-    candidates = [t for t in list_snapshots(root) if t.startswith(prefix)]
+    candidates = list_snapshots(root)
     return candidates[-1] if candidates else None
 
 
@@ -78,6 +78,10 @@ def write_snapshot(
             ).sortWithinPartitions(*cols)
         df.write.mode("overwrite").parquet(os.path.join(base, name))
     return base
+
+
+def has_snapshot_table(root: str, ts: str, name: str) -> bool:
+    return os.path.isdir(os.path.join(snapshot_dir(root, ts), name))
 
 
 def read_snapshot_table(spark: SparkSession, root: str, ts: str, name: str) -> DataFrame:

@@ -29,18 +29,12 @@ its own client — nothing network-bound is serialized):
   re-expressed as partition planning so the detail fetch fans out
   across the cluster instead of looping on one driver.
 
-Unbound OPTIONAL variables surface as NULLs (P6), matching
-``sources/sparql.py flatten_bindings``.
-
-``mode=fake`` serves a deterministic synthetic endpoint (count, paging,
-VALUES batches, an ``_opt``-suffixed sometimes-unbound variable) so the
-source is fully testable offline; the live mode uses SparqlClient's
-urllib transport with its backoff contract (``crud.py:19-48``).
+Unbound OPTIONAL variables surface as NULLs (P6). The stream reader
+pages the same way as the paged mode, one window per micro-batch.
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -62,65 +56,6 @@ class PagePartition(InputPartition):
 @dataclass
 class KeyBatchPartition(InputPartition):
     keys: tuple[str, ...]
-
-
-# ---------------------------------------------------------------------------
-# deterministic fake endpoint (offline tests; options-driven so it
-# exists identically inside executor workers)
-# ---------------------------------------------------------------------------
-
-
-def _fake_rows(options: dict) -> int:
-    return int(options.get("fake_rows", "1000"))
-
-
-def _fake_binding(variables: Sequence[str], i: int) -> dict:
-    """Row i of the synthetic store: the first variable is the key IRI,
-    ``*_opt`` variables are unbound every third row (the OPTIONAL-NULL
-    path), the rest are derived literals."""
-    row: dict[str, dict[str, str]] = {}
-    for j, v in enumerate(variables):
-        if j == 0:
-            row[v] = {"value": f"urn:pid:{i}"}
-        elif v.endswith("_opt") and i % 3 == 0:
-            continue
-        else:
-            row[v] = {"value": f"{v}-{i}"}
-    return row
-
-
-def _fake_transport_factory(options: dict):
-    """A SPARQL transport serving the synthetic store. Recognizes the
-    three query shapes the reader emits: COUNT wrap, VALUES-batched
-    detail, and plain SELECT with LIMIT/OFFSET paging."""
-    total = _fake_rows(options)
-    variables = _variables(options)
-
-    def transport(_url: str, form: dict) -> dict:
-        q = form["query"]
-        values = re.search(r"VALUES\s+\?\w+\s*\{([^}]*)\}", q)
-        if values:
-            keys = re.findall(r"<([^>]+)>", values.group(1))
-            idx = [int(k.rsplit(":", 1)[1]) for k in keys]
-            rows = [_fake_binding(variables, i) for i in sorted(idx) if i < total]
-        else:
-            rows = [_fake_binding(variables, i) for i in range(total)]
-        # honor pushed-down equality/BOUND filters so the COUNT a
-        # pushdown plans against genuinely shrinks (the live server
-        # does the same; anything fancier Spark re-applies anyway)
-        for v, val in re.findall(r'FILTER\(STR\(\?(\w+)\) = "([^"]*)"\)', q):
-            rows = [r for r in rows if r.get(v, {}).get("value") == val]
-        for v in re.findall(r"FILTER\(BOUND\(\?(\w+)\)\)", q):
-            rows = [r for r in rows if v in r]
-        if "(COUNT(*) AS ?n)" in q:
-            return {"results": {"bindings": [{"n": {"value": str(len(rows))}}]}}
-        limit = re.search(r"\bLIMIT\s+(\d+)", q)
-        offset = re.search(r"\bOFFSET\s+(\d+)", q)
-        lo = int(offset.group(1)) if offset else 0
-        hi = lo + int(limit.group(1)) if limit else len(rows)
-        return {"results": {"bindings": rows[lo:hi]}}
-
-    return transport
 
 
 def _subselect(query: str, filters: Sequence[str] = ()) -> str:
@@ -246,29 +181,49 @@ def _variables(options: dict) -> list[str]:
 
 
 def _client(options: dict):
-    from .sparql_http import SparqlClient, urllib_sparql_transport
+    from .sparql_http import SparqlClient
 
-    if options.get("mode") == "fake":
-        return SparqlClient("fake://", transport=_fake_transport_factory(options))
-    return SparqlClient(  # pragma: no cover - network
-        options["endpoint"], transport=urllib_sparql_transport
-    )
+    return SparqlClient(options["endpoint"])
 
 
-class SparqlReader(DataSourceReader):
+class _ResultScan:
+    """What the batch and the stream reader share: the server-side COUNT
+    of the (filtered) query, one ORDER BY-pinned LIMIT/OFFSET window,
+    and the decoding of bindings into row tuples."""
+
     def __init__(self, options: dict, schema: StructType):
         self.options = options
         self.schema = schema
         self.variables = _variables(options)
         self.page_size = int(options.get("page_size", "10000"))
-        self.key_batch = int(options.get("key_batch", "10000"))
         self.query = options["query"]
-        self.keys_query = options.get("keys_query")
-        self.key_var = options.get("key_var", self.variables[0])
         # OFFSET paging is only a stable order when the query is
         # ordered; default to the first projection variable
         self.order_var = options.get("order_var", self.variables[0])
         self.filter_frags: list[str] = []
+
+    def _select(self, query: str) -> list[tuple]:
+        return [
+            tuple(r.get(v, {}).get("value") for v in self.variables)
+            for r in _client(self.options).query(query)
+        ]
+
+    def _total(self) -> int:
+        q = _count_query(self.query, self.filter_frags)
+        return int(_client(self.options).query(q)[0]["n"]["value"])
+
+    def _rows(self, offset: int, count: int) -> list[tuple]:
+        return self._select(
+            _page_query(self.query, self.order_var, count, offset, self.filter_frags)
+        )
+
+
+class SparqlReader(_ResultScan, DataSourceReader):
+    def __init__(self, options: dict, schema: StructType):
+        super().__init__(options, schema)
+        self.key_batch = int(options.get("key_batch", "10000"))
+        self.keys_query = options.get("keys_query")
+        self.key_var = options.get("key_var", self.variables[0])
 
     def pushFilters(self, filters):
         """Filter pushdown at the DSv2 layer (the SPARQL twin of the
@@ -303,11 +258,7 @@ class SparqlReader(DataSourceReader):
                 KeyBatchPartition(keys=tuple(keys[o : o + self.key_batch]))
                 for o in range(0, max(len(keys), 1), self.key_batch)
             ]
-        total = int(
-            _client(self.options).query(
-                _count_query(self.query, self.filter_frags)
-            )[0]["n"]["value"]
-        )
+        total = self._total()
         return [
             PagePartition(offset=o, count=self.page_size)
             for o in range(0, max(total, 1), self.page_size)
@@ -315,29 +266,15 @@ class SparqlReader(DataSourceReader):
 
     # -- execution ---------------------------------------------------------
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        client = _client(self.options)
-        if isinstance(partition, KeyBatchPartition):
-            if not partition.keys:
-                # empty key universe: an empty VALUES {} block is
-                # invalid SPARQL — the one planned partition is empty
-                return
+        if isinstance(partition, PagePartition):
+            yield from self._rows(partition.offset, partition.count)
+        elif partition.keys:
             block = " ".join(f"<{k}>" for k in partition.keys)
-            q = self.query.replace(
-                "{values}", f"VALUES ?{self.key_var} {{ {block} }}"
+            yield from self._select(
+                self.query.replace("{values}", f"VALUES ?{self.key_var} {{ {block} }}")
             )
-            rows = client.query(q)
-        else:
-            rows = client.query(
-                _page_query(
-                    self.query,
-                    self.order_var,
-                    partition.count,
-                    partition.offset,
-                    self.filter_frags,
-                )
-            )
-        for r in rows:
-            yield tuple(r.get(v, {}).get("value") for v in self.variables)
+        # else: empty key universe — an empty VALUES {} block is invalid
+        # SPARQL, so the one planned partition reads nothing
 
 
 class SparqlDataSource(DataSource):
@@ -357,7 +294,7 @@ class SparqlDataSource(DataSource):
         return SparqlStreamReader(dict(self.options), schema)
 
 
-class SparqlStreamReader(SimpleDataSourceStreamReader):
+class SparqlStreamReader(_ResultScan, SimpleDataSourceStreamReader):
     """Micro-batch incremental scan of a SPARQL result set — the
     symmetry twin of ``EsriStreamReader`` (``spark.readStream
     .format("sparql")``): each batch fetches the next ``page_size``
@@ -372,21 +309,6 @@ class SparqlStreamReader(SimpleDataSourceStreamReader):
     snapshot graph/named-graph predicate instead, the analogue of the
     ESRI ``where`` snapshot)."""
 
-    def __init__(self, options: dict, schema: StructType):
-        self.options = options
-        self.schema = schema
-        self.variables = _variables(options)
-        self.page_size = int(options.get("page_size", "10000"))
-        self.query = options["query"]
-        self.order_var = options.get("order_var", self.variables[0])
-
-    def _total(self) -> int:
-        return int(
-            _client(self.options).query(_count_query(self.query))[0]["n"][
-                "value"
-            ]
-        )
-
     def initialOffset(self) -> dict:
         return {"next": 0}
 
@@ -395,14 +317,8 @@ class SparqlStreamReader(SimpleDataSourceStreamReader):
         hi = min(lo + self.page_size, self._total())
         if hi <= lo:
             return iter(()), {"next": lo}
-        return iter(self._rows(lo, hi)), {"next": hi}
+        return iter(self._rows(lo, hi - lo)), {"next": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._rows(int(start["next"]), int(end["next"])))
-
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        q = _page_query(self.query, self.order_var, hi - lo, lo)
-        return [
-            tuple(r.get(v, {}).get("value") for v in self.variables)
-            for r in _client(self.options).query(q)
-        ]
+        lo = int(start["next"])
+        return iter(self._rows(lo, int(end["next"]) - lo))

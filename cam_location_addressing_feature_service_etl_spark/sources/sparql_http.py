@@ -2,38 +2,19 @@
 
 Mirrors ``address_etl/crud.py:25-48``: POST the query text, parse the
 JSON bindings, exponential backoff on transport errors. Transport is
-injected; the default uses stdlib urllib. Used with
-``sources.sparql.bindings_df``/``flatten_bindings`` to land results as
-columnar DataFrames.
-
-The reference's two-phase VALUES batching (keys query → ≤10k-key
-detail queries) is NOT reproduced — in Spark the detail join is a
-broadcast semi-join (J3) against the full key DataFrame, so a single
-detail query per entity suffices; ``fetch_bindings`` just pages
-through it with LIMIT/OFFSET when the endpoint caps result sizes.
+injected; the default uses stdlib urllib. ``sources/sparql_datasource.py``
+runs every query of ``spark.read.format("sparql")`` through it: the
+COUNT wrap and the ordered pages, or the keys query (``query_paged``)
+and one ``VALUES`` batch per partition.
 """
 
 from __future__ import annotations
 
-import json
-import time
-from collections.abc import Callable
-
-Transport = Callable[[str, dict], dict]
+from .transport import Transport, post_json, with_backoff
 
 
-def urllib_sparql_transport(url: str, form: dict) -> dict:  # pragma: no cover - network
-    import urllib.request
-    from urllib.parse import urlencode
-
-    req = urllib.request.Request(
-        url,
-        data=urlencode(form).encode(),
-        headers={"Accept": "application/sparql-results+json"},
-        method="POST",
-    )
-    with urllib.request.urlopen(req, timeout=600) as resp:
-        return json.loads(resp.read().decode())
+def urllib_sparql_transport(url: str, form: dict) -> dict:
+    return post_json(url, form, {"Accept": "application/sparql-results+json"})
 
 
 class SparqlClient:
@@ -50,17 +31,10 @@ class SparqlClient:
     def query(self, query_text: str) -> list[dict[str, dict[str, str]]]:
         """One query → binding rows ({var: {"value": ...}}), with
         exponential backoff on transport failure (crud.py:19-24)."""
-        delay, waited = 1.0, 0.0
-        while True:
-            try:
-                resp = self.transport(self.endpoint, {"query": query_text})
-                return resp["results"]["bindings"]
-            except Exception:
-                if waited >= self.max_backoff_seconds:
-                    raise
-                time.sleep(min(delay, self.max_backoff_seconds - waited))
-                waited += delay
-                delay *= 2
+        return with_backoff(
+            lambda: self.transport(self.endpoint, {"query": query_text})["results"]["bindings"],
+            self.max_backoff_seconds,
+        )
 
     def query_paged(
         self, query_text: str, page_size: int = 10000, max_pages: int = 10000

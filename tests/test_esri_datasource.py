@@ -1,6 +1,7 @@
 """The ESRI Python Data Source read end-to-end through
-spark.read.format("esri") in fake mode: partition planning from the
-count, per-page reads, schema, and downstream plan composition."""
+spark.read.format("esri") against the loopback endpoint: partition
+planning from the count, per-page reads, schema, and downstream plan
+composition."""
 
 from __future__ import annotations
 
@@ -19,11 +20,10 @@ def registered(spark):
     return spark
 
 
-def test_reads_all_pages(registered):
+def test_reads_all_pages(registered, loopback):
     df = (
         registered.read.format("esri")
-        .option("mode", "fake")
-        .option("fake_count", "4500")
+        .option("layer_url", f"{loopback.base}/esri/4500")
         .option("page_size", "2000")
         .load()
     )
@@ -42,7 +42,7 @@ def test_push_filters_translate_to_where(registered):
         EsriReader,
     )
 
-    r = EsriReader({"mode": "fake"}, StructType([]))
+    r = EsriReader({}, StructType([]))
     filters = [
         GreaterThan(("objectid",), 100),
         IsNotNull(("pid",)),
@@ -73,9 +73,9 @@ def test_push_filters_string_in_null_and_wildcard_safety(registered):
         EsriReader,
     )
 
-    from pyspark.sql.datasource import GreaterThan
+    from pyspark.sql.datasource import GreaterThan, LessThan
 
-    r = EsriReader({"mode": "fake"}, StructType([]))
+    r = EsriReader({}, StructType([]))
     r.pushFilters(
         [
             EqualTo(("pid",), "o'brien"),
@@ -87,6 +87,11 @@ def test_push_filters_string_in_null_and_wildcard_safety(registered):
             # string ORDERING is collation-dependent server-side (a CI
             # collation narrows it and loses rows) → never pushed
             GreaterThan(("type",), "Z"),
+            # NaN and ±inf have no SQL-92 literal → never pushed
+            GreaterThan(("x",), float("nan")),
+            LessThan(("y",), float("inf")),
+            EqualTo(("x",), float("-inf")),
+            In(("x",), (1.0, float("nan"))),
         ]
     )
     assert r.where == (
@@ -94,26 +99,24 @@ def test_push_filters_string_in_null_and_wildcard_safety(registered):
     )
 
 
-def test_filtered_read_is_correct_end_to_end(registered):
-    # fake server ignores `where`; because pushFilters returns every
-    # filter for Spark to re-apply, results stay correct regardless
+def test_filtered_read_is_correct_end_to_end(registered, loopback):
+    # the loopback layer ignores `where`; because pushFilters returns
+    # every filter for Spark to re-apply, results stay correct regardless
     df = (
         registered.read.format("esri")
-        .option("mode", "fake")
-        .option("fake_count", "1000")
+        .option("layer_url", f"{loopback.base}/esri/1000")
         .load()
         .filter(F.col("objectid") >= 990)
     )
     assert sorted(r["objectid"] for r in df.collect()) == list(range(990, 1000))
 
 
-def test_composes_with_engine_operators(registered):
+def test_composes_with_engine_operators(registered, loopback):
     """The source output feeds the normal operator pipeline (F6-style
     type-code normalization + grid bucketing)."""
     df = (
         registered.read.format("esri")
-        .option("mode", "fake")
-        .option("fake_count", "1000")
+        .option("layer_url", f"{loopback.base}/esri/1000")
         .load()
     )
     out = (
@@ -125,8 +128,8 @@ def test_composes_with_engine_operators(registered):
     assert len(got) == 7 and sum(got.values()) == 1000
 
 
-def test_esri_stream_reader_incremental_batches(spark):
-    """The streaming twin: availableNow drains the fake layer in
+def test_esri_stream_reader_incremental_batches(spark, loopback):
+    """The streaming twin: availableNow drains the loopback layer in
     page-size micro-batches; rows and ids must match the batch scan."""
     import tempfile
 
@@ -134,8 +137,7 @@ def test_esri_stream_reader_incremental_batches(spark):
     with tempfile.TemporaryDirectory() as ckpt:
         q = (
             spark.readStream.format("esri")
-            .option("mode", "fake")
-            .option("fake_count", "250")
+            .option("layer_url", f"{loopback.base}/esri/250")
             .option("page_size", "100")
             .load()
             .writeStream.format("memory")
@@ -143,7 +145,7 @@ def test_esri_stream_reader_incremental_batches(spark):
             .option("checkpointLocation", ckpt)
             .start()
         )
-        # drain: the fake layer is finite, so "no new data" == all
+        # drain: the layer is finite, so "no new data" == all
         # 3 micro-batches (100+100+50) committed
         q.processAllAvailable()
         q.stop()
@@ -152,7 +154,7 @@ def test_esri_stream_reader_incremental_batches(spark):
     assert {r["objectid"] for r in got} == set(range(250))
 
 
-def test_esri_stream_reader_replay_between_offsets(spark):
+def test_esri_stream_reader_replay_between_offsets(loopback):
     """readBetweenOffsets must replay any committed range identically —
     the exactly-once contract under retry."""
     from pyspark.sql.types import StructType
@@ -161,7 +163,10 @@ def test_esri_stream_reader_replay_between_offsets(spark):
         EsriStreamReader,
     )
 
-    r = EsriStreamReader({"mode": "fake", "fake_count": "50", "page_size": "20"}, StructType())
+    r = EsriStreamReader(
+        {"layer_url": f"{loopback.base}/esri/50", "page_size": "20"},
+        StructType.fromDDL("objectid bigint, pid string, x double"),
+    )
     it, off1 = r.read({"next": 0})
     first = list(it)
     assert off1 == {"next": 20} and len(first) == 20
@@ -193,7 +198,7 @@ def test_stream_reader_pins_fetch_order(monkeypatch):
 
     monkeypatch.setattr(esri_http, "EsriClient", FakeClient)
     reader = esri_datasource.EsriStreamReader(
-        {"layer_url": "http://x", "mode": "live"},
+        {"layer_url": "http://x"},
         StructType([StructField("objectid", LongType(), True)]),
     )
     reader._rows(0, 10)

@@ -1,6 +1,7 @@
 """EsriClient against a fake transport: token auth + expiry, 498
 re-auth, backoff on transport failure, count/page/distinct surface —
-mirroring the reference's connector tests offline."""
+mirroring the reference's connector tests offline; and its urllib
+transport against the loopback endpoint's HTTP errors."""
 
 from __future__ import annotations
 
@@ -67,6 +68,41 @@ def test_498_triggers_reauth_and_retry():
     c = _client(t)
     assert c.count() == 4500
     assert t.tokens_issued == 2  # first token rejected → re-auth
+
+
+def test_persistent_498_reauths_once_then_raises():
+    """A server that rejects every token: one re-auth, then EsriError(498)
+    — never an endless re-auth loop."""
+    sent = []
+
+    def always_498(url, data):
+        sent.append(url)
+        if len(sent) > 10:
+            pytest.fail("client keeps re-sending a rejected token")
+        if url == TOKEN_URL:
+            return {"token": f"tok-{len(sent)}", "expires_in": 900}
+        return {"error": {"code": 498, "message": "Invalid token"}}
+
+    c = _client(always_498)
+    c.max_backoff_seconds = 0.0
+    with pytest.raises(EsriError) as err:
+        c.count()
+    assert err.value.code == 498
+    assert sent == [TOKEN_URL, f"{LAYER}/query"] * 2
+
+
+def test_http_400_raised_at_once_and_503_retried(loopback):
+    """A 4xx rejects the request itself, so it is sent once; a 5xx is
+    transient and retried with backoff."""
+    from urllib.error import HTTPError
+
+    for code, sends in ((400, 1), (503, 2)):
+        layer = f"/status/{code}/esri"
+        c = EsriClient(layer_url=f"{loopback.base}{layer}", max_backoff_seconds=0.01)
+        with pytest.raises(HTTPError) as err:
+            c.count()
+        assert err.value.code == code
+        assert loopback.hits[f"{layer}/query"] == sends
 
 
 def test_backoff_survives_transient_failures():

@@ -6,6 +6,7 @@ runs, and the publish contract."""
 from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,9 +121,9 @@ def test_two_run_lifecycle(spark, tmp_path):
     assert meta["id"] == 1 and meta["end_time"] == "2026-04-23T02:02:30+1000"
 
 
-def test_run_etl_increment_through_dsv2_reader(spark, tmp_path):
+def test_run_etl_increment_through_dsv2_reader(spark, tmp_path, loopback):
     """The geocode increment arrives through spark.read.format("esri")
-    (fake transport) instead of a pre-built DataFrame — the reference's
+    (loopback endpoint) instead of a pre-built DataFrame — the reference's
     fetch→normalize→merge flow (geocode.py:469-488) exercised through
     the DSv2 reader: page partitioning, per-page reads, and the
     normalize mapping feed the same run_etl contract."""
@@ -136,16 +137,14 @@ def test_run_etl_increment_through_dsv2_reader(spark, tmp_path):
     spark.dataSource.register(EsriDataSource)
     feats = (
         spark.read.format("esri")
-        .option("mode", "fake")
-        .option("fake_count", "3")
+        .option("layer_url", f"{loopback.base}/esri/3")
         .option("page_size", "2")
         .load()
     )
     assert feats.rdd.getNumPartitions() == 2  # proves the page plan ran
 
-    # flat DSv2 rows → geocode extract shape (normalize_geocode_features
-    # is for the struct-shaped paged scan; the DSv2 reader already
-    # flattens attributes/geometry into columns)
+    # flat DSv2 rows (attributes and geometry already columns) →
+    # geocode extract shape
     fetched_geocodes = feats.select(
         F.col("objectid").cast("string").alias("geocode_id"),
         normalize_geocode_type(F.col("type")).alias("geocode_type"),
@@ -193,3 +192,46 @@ def test_run_etl_increment_through_dsv2_reader(spark, tmp_path):
     # objectid 2 (pid 100002, no address) pruned. type-0 → "T0" etc.
     # via the initialism fallback (F6).
     assert geo == {"0": ("T0", "site-a"), "1": ("T1", "site-b")}
+
+
+def _parcels(spark):
+    return spark.createDataFrame(
+        [("parcel-A", "SP1"), ("parcel-B", "SP2")], "parcel_id string, plan_no string"
+    )
+
+
+def _run(spark, root, day, tables_to_remap):
+    return run_etl(
+        spark,
+        snapshot_root=root,
+        start_time=datetime(2026, 6, day, 2, 0, 0, tzinfo=BNE),
+        end_time=datetime(2026, 6, day, 2, 2, 30, tzinfo=BNE),
+        fetched_iri_pid=_pid_map(spark, [("iri/1", "100")]),
+        fetched_geocodes=_geocodes(spark, []),
+        lf_address=_addresses(spark, [("addr-1", "100", "site-1", "parcel-A")]),
+        tables_to_remap=tables_to_remap,
+    )
+
+
+def test_table_without_a_prior_map_gets_fresh_ids(spark, tmp_path):
+    """A table remapped for the first time has no id map in the prior
+    snapshot: its keys are numbered from 1."""
+    root = str(tmp_path / "snaps")
+    _run(spark, root, 1, {})
+    r = _run(spark, root, 2, {"lf_parcel": (_parcels(spark), "parcel_id")})
+    assert r.previous_snapshot_ts is not None
+    ids = {row["iri"]: row["id"] for row in r.tables["lf_parcel_id_map"].collect()}
+    assert sorted(ids.values()) == [1, 2]
+
+
+def test_unreadable_prior_map_fails_the_run(spark, tmp_path):
+    """An id map that exists but cannot be read must fail the run:
+    numbering from 1 again would reassign the stable surrogate ids."""
+    from pyspark.errors import AnalysisException
+
+    root = str(tmp_path / "snaps")
+    r1 = _run(spark, root, 1, {"lf_parcel": (_parcels(spark), "parcel_id")})
+    for f in (Path(r1.snapshot_path) / "lf_parcel_id_map").glob("*.parquet"):
+        f.unlink()
+    with pytest.raises(AnalysisException, match="(?i)parquet"):
+        _run(spark, root, 2, {"lf_parcel": (_parcels(spark), "parcel_id")})

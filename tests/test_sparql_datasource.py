@@ -1,5 +1,6 @@
 """The SPARQL Python Data Source end-to-end through
-spark.read.format("sparql") in fake mode — mirroring the ESRI source
+spark.read.format("sparql") against the loopback endpoint — mirroring
+the ESRI source
 tests: paged partition planning from a server-side COUNT, the
 keys-then-details VALUES mode (the reference's two-phase extract as
 partition planning), OPTIONAL-unbound → NULL, and reader internals with
@@ -26,11 +27,10 @@ def registered(spark):
     return spark
 
 
-def test_paged_read_all_rows(registered):
+def test_paged_read_all_rows(registered, loopback):
     df = (
         registered.read.format("sparql")
-        .option("mode", "fake")
-        .option("fake_rows", "450")
+        .option("endpoint", f"{loopback.base}/sparql/450")
         .option("page_size", "200")
         .option("variables", "pid,street,unit_opt")
         .option("query", _Q)
@@ -46,14 +46,13 @@ def test_paged_read_all_rows(registered):
     assert df.filter("street = 'street-7'").count() == 1
 
 
-def test_keys_then_details_partitioning(registered):
+def test_keys_then_details_partitioning(registered, loopback):
     """The reference's two-phase VALUES extract
     (pls/tables.py:401-472): keys query plans the partitions, each
     partition VALUES-batches its keys into the detail query."""
     df = (
         registered.read.format("sparql")
-        .option("mode", "fake")
-        .option("fake_rows", "100")
+        .option("endpoint", f"{loopback.base}/sparql/100")
         .option("key_batch", "30")
         .option("variables", "pid,street")
         .option("keys_query", "SELECT ?pid WHERE { ?pid a :Addr }")
@@ -88,8 +87,7 @@ def test_reader_emits_count_wrap_and_ordered_pages():
         return {"results": {"bindings": [{"pid": {"value": "urn:pid:1"}}]}}
 
     reader = SparqlReader(
-        {"query": _Q, "variables": "pid,street", "page_size": "10",
-         "mode": "fake"},
+        {"query": _Q, "variables": "pid,street", "page_size": "10"},
         StructType(),
     )
     import cam_location_addressing_feature_service_etl_spark.sources.sparql_datasource as m
@@ -140,7 +138,6 @@ def test_reader_values_block_substitution():
             "query": "SELECT ?pid ?s WHERE { {values} ?pid :s ?s }",
             "variables": "pid,s",
             "keys_query": "SELECT ?pid WHERE { ?pid a :A }",
-            "mode": "fake",
         },
         StructType(),
     )
@@ -161,14 +158,13 @@ def test_missing_variables_option_raises():
         SparqlDataSource(options={"query": _Q}).schema()
 
 
-def test_composes_with_flatten_semantics(registered):
+def test_composes_with_flatten_semantics(registered, loopback):
     """Source output feeds normal operators: group the synthetic rows
     by the unbound-unit flag — the OPTIONAL semantics the reference's
     lf_address extract relies on (tables.py:361-364)."""
     df = (
         registered.read.format("sparql")
-        .option("mode", "fake")
-        .option("fake_rows", "90")
+        .option("endpoint", f"{loopback.base}/sparql/90")
         .option("variables", "pid,unit_opt")
         .option("query", _Q)
         .load()
@@ -201,7 +197,6 @@ def test_empty_key_universe_reads_empty(registered):
             "query": "SELECT ?pid WHERE { {values} ?pid a :A }",
             "variables": "pid",
             "keys_query": "SELECT ?pid WHERE { ?pid a :Nothing }",
-            "mode": "fake",
         },
         StructType(),
     )
@@ -215,8 +210,8 @@ def test_empty_key_universe_reads_empty(registered):
         m._client = orig
 
 
-def test_sparql_stream_reader_incremental_batches(spark):
-    """The streaming twin: availableNow drains the fake endpoint in
+def test_sparql_stream_reader_incremental_batches(spark, loopback):
+    """The streaming twin: availableNow drains the loopback store in
     page-size micro-batches; rows and keys must match the batch
     scan (mirrors the ESRI stream test)."""
     import tempfile
@@ -225,8 +220,7 @@ def test_sparql_stream_reader_incremental_batches(spark):
     with tempfile.TemporaryDirectory() as ckpt:
         q = (
             spark.readStream.format("sparql")
-            .option("mode", "fake")
-            .option("fake_rows", "250")
+            .option("endpoint", f"{loopback.base}/sparql/250")
             .option("page_size", "100")
             .option("variables", "pid,street")
             .option("query", _Q)
@@ -243,7 +237,7 @@ def test_sparql_stream_reader_incremental_batches(spark):
     assert {r["pid"] for r in got} == {f"urn:pid:{i}" for i in range(250)}
 
 
-def test_sparql_stream_reader_replay_between_offsets():
+def test_sparql_stream_reader_replay_between_offsets(loopback):
     """readBetweenOffsets must replay any committed range identically,
     and every page query pins ORDER BY — the exactly-once contract
     under retry."""
@@ -254,7 +248,7 @@ def test_sparql_stream_reader_replay_between_offsets():
     )
 
     r = SparqlStreamReader(
-        {"mode": "fake", "fake_rows": "50", "page_size": "20",
+        {"endpoint": f"{loopback.base}/sparql/50", "page_size": "20",
          "variables": "pid,street", "query": _Q},
         StructType(),
     )
@@ -292,7 +286,7 @@ def test_modifier_composition_with_self_modified_query():
         assert comment < closing, built  # brace survives the comment
 
 
-def test_push_filters_translate_and_shrink_partitions():
+def test_push_filters_translate_and_shrink_partitions(loopback):
     """SPARQL filter pushdown (the ESRI P5 twin): supported predicates
     become FILTER clauses outside the subselect wrap, the planning
     COUNT shrinks (fewer page partitions), and the page reads return
@@ -327,8 +321,7 @@ def test_push_filters_translate_and_shrink_partitions():
             "query": "SELECT ?pid ?street WHERE { ?pid :street ?street }",
             "variables": "pid,street",
             "page_size": "10",
-            "mode": "fake",
-            "fake_rows": "100",
+            "endpoint": f"{loopback.base}/sparql/100",
         },
         StructType(),
     )
@@ -372,16 +365,15 @@ def test_string_ordering_pushdown_is_opt_in():
     assert len(back_opt) == 3
 
 
-def test_filtered_read_is_correct_end_to_end(registered):
+def test_filtered_read_is_correct_end_to_end(registered, loopback):
     """spark.read + .filter on the registered source: whether or not
-    the fake server honors the pushed FILTER, re-application keeps the
+    the server honors the pushed FILTER, re-application keeps the
     result exact."""
     from pyspark.sql import functions as F
 
     df = (
         registered.read.format("sparql")
-        .option("mode", "fake")
-        .option("fake_rows", "60")
+        .option("endpoint", f"{loopback.base}/sparql/60")
         .option("variables", "pid,street")
         .option("query", "SELECT ?pid ?street WHERE { ?pid :street ?street }")
         .load()

@@ -1,14 +1,11 @@
 """SparqlClient against a fake transport: bindings parse, backoff,
-LIMIT/OFFSET paging, and integration into flatten_bindings."""
+LIMIT/OFFSET paging; and its urllib transport against the loopback
+endpoint's HTTP errors."""
 
 from __future__ import annotations
 
 import pytest
 
-from cam_location_addressing_feature_service_etl_spark.sources.sparql import (
-    bindings_df,
-    flatten_bindings,
-)
 from cam_location_addressing_feature_service_etl_spark.sources.sparql_http import (
     SparqlClient,
 )
@@ -61,8 +58,15 @@ def test_paged_query_reassembles():
     assert len(t.queries) == 3  # 10 + 10 + 5
 
 
-def test_client_rows_flow_into_flatten(spark):
-    c = SparqlClient("https://example.com/sparql", transport=FakeTransport())
-    df = flatten_bindings(bindings_df(spark, c.query("SELECT ...")), ["iri", "name"])
-    assert df.count() == 25
-    assert df.filter("name = 'n7'").collect()[0]["iri"] == "https://x/7"
+def test_http_400_raised_at_once_and_503_retried(loopback):
+    """A 4xx rejects the query itself (a malformed query stays malformed),
+    so it is sent once; a 5xx is transient and retried with backoff."""
+    from urllib.error import HTTPError
+
+    for code, sends in ((400, 1), (503, 2)):
+        path = f"/status/{code}/sparql"
+        c = SparqlClient(f"{loopback.base}{path}", max_backoff_seconds=0.01)
+        with pytest.raises(HTTPError) as err:
+            c.query("SELECT ?s WHERE { ?s ?p ?o }")
+        assert err.value.code == code
+        assert loopback.hits[path] == sends
